@@ -68,6 +68,37 @@ class VectorFunctionsSpec extends SparkSpec {
     assert(empty.isEmpty)
   }
 
+  test("vecSumLong rejects ARRAY<DOUBLE> instead of truncating it") {
+    import spark.implicits._
+    val df = Seq(Array(1.9, 2.5), Array(0.6, -0.7)).toDF("v")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      df.agg(graft.functions.VectorFunctions.vecSumLong($"v").as("s")).collect()
+    }
+    assert(e.getMessage.contains("ARRAY<BIGINT>"))
+  }
+
+  test("vecSumLong fails loudly on overflow in update and in merge") {
+    // the VectorSumLongAgg methods an ArithmeticException was thrown from
+    def overflowIn(df: org.apache.spark.sql.DataFrame): Set[String] = {
+      val e = intercept[Exception] {
+        df.agg(graft.functions.VectorFunctions.vecSumLong(col("v"))).collect()
+      }
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collect { case a: ArithmeticException => a }.toSeq
+        .flatMap(_.getStackTrace)
+        .filter(_.getClassName.endsWith("VectorSumLongAgg"))
+        .map(_.getMethodName).toSet
+    }
+    val partial = (1L << 62) + 1 // two of these pass Long.MaxValue
+    // one row per partition: each partial holds 2^62 + 1, the merge overflows
+    val twoParts = spark.range(0, 2, 1, 2).select(array(lit(partial)).as("v"))
+    assert(twoParts.rdd.getNumPartitions == 2)
+    assert(overflowIn(twoParts).contains("merge"))
+    // both rows in one partition: the update overflows
+    val onePart = spark.range(0, 2, 1, 1).select(array(lit(partial)).as("v"))
+    assert(overflowIn(onePart).contains("update"))
+  }
+
   import spark.implicits._
 
   private def arr(xs: Double*) = array(xs.map(lit): _*)
