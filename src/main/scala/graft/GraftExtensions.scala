@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import graft.functions.expressions.{AcHits, BlockHash, BloomBuildAgg, BloomProbe, CmsLookup, DeflateRatio, DotProduct, FoldAccents, LcsLen, PqSubDists, TokenStats, VectorSumAgg, VocabHits, WordNgrams}
 
@@ -24,127 +26,65 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_dot takes exactly 2 arguments")
-        // accept ARRAY<FLOAT|DOUBLE>: insert the cast the analyzer would
-        val cast = args.map(a =>
-          org.apache.spark.sql.catalyst.expressions.Cast(
-            a, org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.DoubleType)))
-        DotProduct(cast.head, cast(1))
-      }),
-    (FunctionIdentifier("graft_vecsum"),
-      new ExpressionInfo(classOf[VectorSumAgg].getName, "graft_vecsum"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_vecsum takes exactly 1 argument")
-        VectorSumAgg(org.apache.spark.sql.catalyst.expressions.Cast(
-          args.head, org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)))
-      }),
-    (FunctionIdentifier("graft_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "graft_ngrams"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_ngrams takes exactly 2 arguments")
-        WordNgrams(args.head, args(1))
-      }),
-    (FunctionIdentifier("graft_token_stats"),
-      new ExpressionInfo(classOf[TokenStats].getName, "graft_token_stats"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_token_stats takes exactly 1 argument")
-        TokenStats(args.head)
-      }),
-    (FunctionIdentifier("graft_zratio"),
-      new ExpressionInfo(classOf[DeflateRatio].getName, "graft_zratio"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_zratio takes exactly 1 argument")
-        DeflateRatio(args.head)
-      }),
-    (FunctionIdentifier("graft_cms_probe"),
-      new ExpressionInfo(classOf[CmsLookup].getName, "graft_cms_probe"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_cms_probe takes exactly 2 arguments")
-        CmsLookup(args.head, args(1))
-      }),
-    (FunctionIdentifier("graft_blockhash"),
-      new ExpressionInfo(classOf[BlockHash].getName, "graft_blockhash"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_blockhash takes exactly 2 arguments")
-        BlockHash(args.head, args(1))
-      }),
-    (FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(classOf[BloomBuildAgg].getName, "graft_bloom_agg"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "graft_bloom_agg takes exactly 3 arguments")
-        BloomBuildAgg(args.head, args(1), args(2))
-      }),
-    (FunctionIdentifier("graft_bloom_probe"),
-      new ExpressionInfo(classOf[BloomProbe].getName, "graft_bloom_probe"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_bloom_probe takes exactly 2 arguments")
-        BloomProbe(args.head, args(1))
-      }),
-    (FunctionIdentifier("graft_pq_subdists"),
-      new ExpressionInfo(classOf[PqSubDists].getName, "graft_pq_subdists"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "graft_pq_subdists takes exactly 3 arguments")
-        require(args(2).foldable, "graft_pq_subdists requires a literal m")
-        val m = args(2).eval(null) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_pq_subdists m must be an integer literal, got $other")
-        }
-        val cast = args.take(2).map(a =>
-          org.apache.spark.sql.catalyst.expressions.Cast(
-            a, org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.DoubleType)))
-        PqSubDists(cast.head, cast(1), m)
-      }),
-    (FunctionIdentifier("graft_fold_accents"),
-      new ExpressionInfo(classOf[FoldAccents].getName, "graft_fold_accents"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_fold_accents takes exactly 1 argument")
-        FoldAccents(args.head)
-      }),
-    (FunctionIdentifier("graft_lcs"),
-      new ExpressionInfo(classOf[LcsLen].getName, "graft_lcs"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_lcs takes exactly 2 arguments")
-        LcsLen(args.head, args(1))
-      }),
-    (FunctionIdentifier("graft_ac_hits"),
-      new ExpressionInfo(classOf[AcHits].getName, "graft_ac_hits"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_ac_hits takes exactly 2 arguments")
-        require(args(1).foldable,
-          "graft_ac_hits requires a literal pattern array")
-        val arr = args(1).eval(null)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        require(arr != null && arr.numElements() > 0,
-          "graft_ac_hits requires at least one pattern")
-        val pats = (0 until arr.numElements()).map { i =>
-          require(!arr.isNullAt(i), "graft_ac_hits patterns must be non-null")
-          arr.getUTF8String(i).toString
-        }
-        AcHits(args.head, pats)
-      }),
-    (FunctionIdentifier("graft_vocab_hits"),
-      new ExpressionInfo(classOf[VocabHits].getName, "graft_vocab_hits"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_vocab_hits takes exactly 2 arguments")
-        require(args(1).foldable,
-          "graft_vocab_hits requires a literal vocabulary array")
-        val arr = args(1).eval(null)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        val words =
-          if (arr == null) Seq.empty[String]
-          else (0 until arr.numElements()).flatMap(i =>
-            if (arr.isNullAt(i)) None else Some(arr.getUTF8String(i).toString))
-        VocabHits(args.head, words)
-      }))
+  /** One SQL function: its name, expression class, arity, and a builder
+    * that receives exactly `arity` arguments. */
+  final case class Fn(name: String, cls: Class[_ <: Expression], arity: Int,
+                      build: Seq[Expression] => Expression)
+
+  /** Accept ARRAY<FLOAT|DOUBLE>: insert the cast the analyzer would. */
+  private def doubles(e: Expression): Expression = Cast(e, ArrayType(DoubleType))
+
+  /** The elements of a literal string array (None for a null element);
+    * empty for a null array. */
+  private def literalStrings(e: Expression, fn: String, what: String): Seq[Option[String]] = {
+    require(e.foldable, s"$fn requires a literal $what")
+    Option(e.eval(null).asInstanceOf[ArrayData]).toSeq.flatMap(arr =>
+      (0 until arr.numElements()).map(i =>
+        if (arr.isNullAt(i)) None else Some(arr.getUTF8String(i).toString)))
+  }
+
+  val table: Seq[Fn] = Seq(
+    Fn("graft_dot", classOf[DotProduct], 2, a => DotProduct(doubles(a(0)), doubles(a(1)))),
+    Fn("graft_vecsum", classOf[VectorSumAgg], 1, a => VectorSumAgg(doubles(a(0)))),
+    Fn("graft_ngrams", classOf[WordNgrams], 2, a => WordNgrams(a(0), a(1))),
+    Fn("graft_token_stats", classOf[TokenStats], 1, a => TokenStats(a(0))),
+    Fn("graft_zratio", classOf[DeflateRatio], 1, a => DeflateRatio(a(0))),
+    Fn("graft_cms_probe", classOf[CmsLookup], 2, a => CmsLookup(a(0), a(1))),
+    Fn("graft_blockhash", classOf[BlockHash], 2, a => BlockHash(a(0), a(1))),
+    Fn("graft_bloom_agg", classOf[BloomBuildAgg], 3, a => BloomBuildAgg(a(0), a(1), a(2))),
+    Fn("graft_bloom_probe", classOf[BloomProbe], 2, a => BloomProbe(a(0), a(1))),
+    Fn("graft_pq_subdists", classOf[PqSubDists], 3, a => {
+      require(a(2).foldable, "graft_pq_subdists requires a literal m")
+      val m = a(2).eval(null) match {
+        case i: Int => i
+        case l: Long => l.toInt
+        case other => throw new IllegalArgumentException(
+          s"graft_pq_subdists m must be an integer literal, got $other")
+      }
+      PqSubDists(doubles(a(0)), doubles(a(1)), m)
+    }),
+    Fn("graft_fold_accents", classOf[FoldAccents], 1, a => FoldAccents(a(0))),
+    Fn("graft_lcs", classOf[LcsLen], 2, a => LcsLen(a(0), a(1))),
+    Fn("graft_ac_hits", classOf[AcHits], 2, a => {
+      val pats = literalStrings(a(1), "graft_ac_hits", "pattern array")
+      require(pats.nonEmpty, "graft_ac_hits requires at least one pattern")
+      AcHits(a(0), pats.map { p =>
+        require(p.isDefined, "graft_ac_hits patterns must be non-null")
+        p.get
+      })
+    }),
+    Fn("graft_vocab_hits", classOf[VocabHits], 2, a =>
+      VocabHits(a(0), literalStrings(a(1), "graft_vocab_hits", "vocabulary array").flatten)))
+
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    table.map { f =>
+      (FunctionIdentifier(f.name), new ExpressionInfo(f.cls.getName, f.name),
+        (args: Seq[Expression]) => {
+          require(args.length == f.arity, s"${f.name} takes exactly ${f.arity} " +
+            (if (f.arity == 1) "argument" else "arguments"))
+          f.build(args)
+        })
+    }
 
   /** Register the native functions on an existing session (for sessions
     * built without the spark.sql.extensions config — tests, Verify, Bench).

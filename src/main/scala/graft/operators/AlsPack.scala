@@ -72,11 +72,10 @@ object AlsPack extends QueryPack {
         .select(col("user_id"), col("item_id"))
         .filter((col("user_id") + col("item_id")) % 97 === 0)
         .distinct()
-      pairs
-        .join(broadcast(Ratings.userFactors(s, dir, K)), "user_id")
-        .join(broadcast(Ratings.itemFactors(s, dir, K)), "item_id")
+      AlsScoring.predictions(pairs,
+        Ratings.userFactors(s, dir, K), Ratings.itemFactors(s, dir, K))
         .select(col("user_id"), col("item_id"),
-          round(dot(col("uf"), col("itf")), 6).as("prediction"))
+          round(col("prediction"), 6).as("prediction"))
         .orderBy("user_id", "item_id")
     }),
 
@@ -94,11 +93,10 @@ object AlsPack extends QueryPack {
       val k = 5
       val r = Ratings.ratings(s, dir)
         .groupBy("user_id", "item_id").agg(max(col("rating")).as("rel"))
-      val scored = r
-        .join(broadcast(Ratings.userFactors(s, dir, K)), "user_id")
-        .join(broadcast(Ratings.itemFactors(s, dir, K)), "item_id")
+      val scored = AlsScoring.predictions(r,
+        Ratings.userFactors(s, dir, K), Ratings.itemFactors(s, dir, K))
         .select(col("user_id"), col("item_id"), col("rel"),
-          dot(col("uf"), col("itf")).as("pred"))
+          col("prediction").as("pred"))
       val wP = Window.partitionBy("user_id")
         .orderBy(col("pred").desc, col("item_id"))
       val wI = Window.partitionBy("user_id")

@@ -17,22 +17,32 @@ object AlsScoring {
 
   /** J2/J5: score every rating with dot(userFactors, itemFactors).
     * Model tables are broadcast — at 100 TB fact scale the model stays
-    * ~O(users+items) and this remains a map-side join. */
-  def predictions(ratings: DataFrame, userF: DataFrame, itemF: DataFrame): DataFrame =
-    ratings
-      .join(broadcast(userF), "user_id")
-      .join(broadcast(itemF), "item_id")
+    * ~O(users+items) and this remains a map-side join. A side given a
+    * mean vector falls back to it for keys the model lacks, the
+    * reference's per-lookup `orElse(MEAN)` (als-ms/SGD.java:142-147,227);
+    * a side without one drops the rating. */
+  def scored(ratings: DataFrame, userF: DataFrame, itemF: DataFrame,
+             meanU: Option[Column] = None, meanI: Option[Column] = None): DataFrame =
+    lookup(lookup(ratings, userF, "user_id", "uf", meanU),
+      itemF, "item_id", "itf", meanI)
       .withColumn("prediction", dot(col("uf"), col("itf")))
 
-  /** Left-outer variant with mean-vector fallback — the reference's
-    * `orElse(MEAN)` semantics (als-ms/SGD.java:142-147,227). */
+  def predictions(ratings: DataFrame, userF: DataFrame, itemF: DataFrame): DataFrame =
+    scored(ratings, userF, itemF)
+
   def predictionsWithFallback(ratings: DataFrame, userF: DataFrame,
                               itemF: DataFrame, meanU: Column, meanI: Column): DataFrame =
-    ratings
-      .join(broadcast(userF), Seq("user_id"), "left_outer")
-      .join(broadcast(itemF), Seq("item_id"), "left_outer")
-      .withColumn("prediction",
-        dot(coalesce(col("uf"), meanU), coalesce(col("itf"), meanI)))
+    scored(ratings, userF, itemF, Some(meanU), Some(meanI))
+
+  /** The model lookup as a join: `base` against the broadcast `table` on
+    * `key`. Without a mean the join is inner; with one it is left-outer
+    * and a missing `vec` becomes the mean. */
+  def lookup(base: DataFrame, table: DataFrame, key: String, vec: String,
+             mean: Option[Column]): DataFrame = mean match {
+    case Some(m) => base.join(broadcast(table), Seq(key), "left_outer")
+      .withColumn(vec, coalesce(col(vec), m))
+    case None => base.join(broadcast(table), key)
+  }
 
   /** A4: mean squared error of (rating, prediction). MSE.java:52-69.
     * Squared via multiplication (not pow) so each row's error term is

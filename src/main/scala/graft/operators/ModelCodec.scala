@@ -37,30 +37,43 @@ object ModelCodec extends QueryPack {
     transform(split(try_element_at(split(rec, ","), lit(3)), ";"),
       s => s.try_cast("double"))
 
-  /** P4: state key "id-KIND" (ALSKafkaConsumer.java:78-80). Uses the RAW
-    * id field, not the numeric parse — the mean rows are keyed "MEAN-U" /
-    * "MEAN-I" (ALSMeanVector.scala:35, SGD.java:142-147) and must survive. */
+  /** P4: the state key "id-KIND" (ALSKafkaConsumer.java:78-80) — the one
+    * spelling of it. Every reader and writer of the store goes through
+    * these: the string form for point reads and writes, the Column form
+    * for keyed dataflow, [[idOfKey]] for the way back. */
+  val User = "U"
+  val Item = "I"
+  val Weight = "W"
+  val Bucket = "B"
+  val MeanId = "MEAN"
+  /** The served mean vectors (ALSMeanVector.scala:35, SGD.java:142-147). */
+  val MeanUser: String = s"$MeanId-$User"
+  val MeanItem: String = s"$MeanId-$Item"
+
+  def key(id: Long, kind: String): String = s"$id-$kind"
+  def key(id: Column, kind: String): Column = concat(id, lit(s"-$kind"))
+
+  /** The numeric id of a `kind` key, null for any other key (another
+    * kind, or a non-numeric id such as the MEAN rows). */
+  def idOfKey(key: Column, kind: String): Column =
+    when(key.endsWith(s"-$kind"),
+      split(key, "-").getItem(0).try_cast("long"))
+
+  /** The state key of a wire record. Uses the RAW id field, not the
+    * numeric parse, so the MEAN rows keep their keys. */
   def stateKey(rec: Column): Column =
     concat_ws("-", try_element_at(split(rec, ","), lit(1)), parseKind(rec))
 
   /** P5: the SVM kv wire codec (svm-ms/SVMKafkaConsumer.java:74-82).
-    * Weights travel as `"featureId,weight"`; the consumer derives state
-    * key `"fid-W"` and the double payload. Same poison-record policy as
-    * the ALS codec: malformed fields parse to null, never throw. */
+    * Weights travel as `"featureId,weight"` and are served under the
+    * [[Weight]] key with a one-element payload. Same poison-record policy
+    * as the ALS codec: malformed fields parse to null, never throw. */
   def encodeSvmRecord(featureId: Column, w: Column): Column =
     concat_ws(",", featureId, format_string("%.6f", w))
   def parseSvmWeight(rec: Column): Column =
     try_element_at(split(rec, ","), lit(2)).try_cast("double")
   def svmStateKey(rec: Column): Column =
-    concat_ws("-", try_element_at(split(rec, ","), lit(1)), lit("W"))
-
-  /** Null-safe parse of "user,item,rating" lines (the SGD/MSE wire input,
-    * SGD.java:96-110): malformed fields become nulls and the row is
-    * dropped — a poison record must not kill a streaming query. */
-  def parseRatingLines(lines: Column): Seq[Column] = Seq(
-    try_element_at(split(lines, ","), lit(1)).try_cast("long").as("user_id"),
-    try_element_at(split(lines, ","), lit(2)).try_cast("long").as("item_id"),
-    try_element_at(split(lines, ","), lit(3)).try_cast("double").as("rating"))
+    concat_ws("-", try_element_at(split(rec, ","), lit(1)), lit(Weight))
 
   // ---- driver-contract queries -------------------------------------------
 

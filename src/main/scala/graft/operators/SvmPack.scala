@@ -50,8 +50,9 @@ object SvmPack extends QueryPack {
           format_string("%.6f", e.getField("w")))))
 
   /** Load the range-partitioned export ("bucket,idx:w;…" payload rows,
-    * the q05 layout) into a bucket-keyed serving store: key "bucket-B",
-    * value = range-sized array with weights at `idx % range` offsets —
+    * the q05 layout) into a bucket-keyed serving store: key = the
+    * bucket's [[ModelCodec.Bucket]] state key, value = range-sized array
+    * with weights at `idx % range` offsets —
     * the layout RangePartitionSVMPredict.java:63-70 amortizes lookups
     * against, consumed by PredictBench.svmBucketed. */
   def bucketedStore(layout: DataFrame,
@@ -73,7 +74,7 @@ object SvmPack extends QueryPack {
               System.err.println(s"[bucketedStore] skipping bad entry '$kv'")
           }
         }
-        store.put(s"${r.getLong(0)}-B", packed)
+        store.put(ModelCodec.key(r.getLong(0), ModelCodec.Bucket), packed)
       }
     }
     store

@@ -112,19 +112,12 @@ object KafkaIO {
       checkpointDir)
 
   /** The connector-independent tail of [[serveFromKafka]]: any (value,
-    * offset, …) record stream → latest-per-key → idempotent store upsert.
+    * offset, …) record stream → latest-per-key → idempotent store upsert,
+    * through [[ModelConsumer.serveTo]] with the offset as the sequence.
     * KafkaIOSpec drives it end-to-end on the wire-schema twin. */
   def serveFromLines(spark: SparkSession, lines: DataFrame,
                      store: ServingStore.FactorStore,
-                     checkpointDir: String): StreamingQuery = {
-    val keyed = ModelConsumer.latestPerKey(spark,
-      ModelConsumer.parse(lines, seqCol = Some("offset")))
-    keyed.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[ModelConsumer.KeyedRecord], _: Long) =>
-        ServingStore.upsertBatch(store, batch.toDF())
-      }
-      .start()
-  }
+                     checkpointDir: String): StreamingQuery =
+    ModelConsumer.serveTo(spark, lines, store, Some(checkpointDir),
+      seqCol = Some("offset"))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.operators.ModelCodec
 
@@ -35,12 +35,8 @@ object ModelConsumer {
     * offset get seq=0: later BATCHES overwrite earlier ones, but the winner
     * among same-key records WITHIN one batch is undefined (no source order
     * exists to honor) — same as the reference under cross-partition reads. */
-  def parse(lines: DataFrame, seqCol: Option[String] = None): DataFrame = {
-    val withSeq = seqCol match {
-      case Some(c) => lines.withColumn("seq", col(c).cast("long"))
-      case None    => lines.withColumn("seq", lit(0L))
-    }
-    withSeq.select(
+  def parse(lines: DataFrame, seqCol: Option[String] = None): DataFrame =
+    lines.withColumn("seq", seqCol.fold(lit(0L))(c => col(c).cast("long"))).select(
       ModelCodec.stateKey(col("value")).as("key"),
       col("seq"),
       ModelCodec.parseFactors(col("value")).as("factors"))
@@ -49,7 +45,6 @@ object ModelConsumer {
       // a null element would NPE the primitive-array encoder downstream
       .filter(col("factors").isNotNull &&
         !exists(col("factors"), f => f.isNull))
-  }
 
   /** Latest-record-wins per key across micro-batches; emits a key ONLY in
     * batches where its state actually changed (flatMap — stale replays
@@ -80,19 +75,17 @@ object ModelConsumer {
       .agg(max_by(col("factors"), col("seq")).as("factors"),
         max(col("seq")).as("seq"))
 
-  /** Wire a parsed+keyed stream into a store: per micro-batch, upsert the
-    * changed keys. Checkpointing + restart supervision come from the
-    * streaming engine (`checkpointLocation`), matching the reference's
+  /** The one stream→store wiring: parse (`seqCol` as the per-key
+    * sequence, see [[parse]]), keep latest-per-key state, and upsert the
+    * changed keys each micro-batch. File and memory sources pass no
+    * seqCol; the Kafka path ([[KafkaIO.serveFromLines]]) passes "offset".
+    * Checkpointing + restart supervision come from the streaming engine
+    * (`checkpointLocation`), matching the reference's
     * checkpoint/fixed-delay-restart envelope (ALSKafkaConsumer.java:44-51). */
   def serveTo(spark: SparkSession, lines: DataFrame,
               store: ServingStore.FactorStore,
-              checkpointDir: Option[String] = None): StreamingQuery = {
-    val keyed = latestPerKey(spark, parse(lines))
-    val w: DataStreamWriter[KeyedRecord] = keyed.writeStream
-      .outputMode(OutputMode.Update)
-      .foreachBatch { (batch: Dataset[KeyedRecord], _: Long) =>
-        ServingStore.upsertBatch(store, batch.toDF())
-      }
-    checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
-  }
+              checkpointDir: Option[String] = None,
+              seqCol: Option[String] = None): StreamingQuery =
+    ServingStore.eachBatch(latestPerKey(spark, parse(lines, seqCol)), checkpointDir)(
+      (batch, _) => ServingStore.upsertBatch(store, batch.toDF()))
 }

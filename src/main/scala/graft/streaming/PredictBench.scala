@@ -4,6 +4,8 @@ import java.io.{BufferedWriter, FileWriter}
 
 import scala.util.Random
 
+import graft.operators.ModelCodec
+
 /** Random-workload latency benches over the served model — the Spark twin
   * of the reference's query clients (SURVEY.md §5):
   *
@@ -62,7 +64,8 @@ object PredictBench {
 
   /** The bucketed variant: same sparse workload, but weights are fetched
     * once per `featureId/range` bucket from a bucket-keyed store
-    * ("bucket-B" -> packed weights at bucket offsets). */
+    * (bucket key -> packed weights at bucket offsets, see
+    * [[graft.operators.SvmPack.bucketedStore]]). */
   def svmBucketed(bucketStore: ServingStore.FactorStore, n: Int,
                   maxFeatures: Int, numFeatures: Int, range: Int,
                   seed: Long = 42L): Seq[QueryStat] = {
@@ -75,7 +78,7 @@ object PredictBench {
       val t0 = System.nanoTime()
       val byBucket = feats.groupBy { case (fid, _) => fid / range }
       val p = byBucket.iterator.map { case (bucket, fs) =>
-        bucketStore.get(s"$bucket-B") match {
+        bucketStore.get(ModelCodec.key(bucket, ModelCodec.Bucket)) match {
           case Some(w) => fs.iterator.map { case (fid, x) =>
             val off = (fid % range).toInt
             if (off < w.length) w(off) * x else 0.0

@@ -1,9 +1,11 @@
 package graft.streaming
 
+import graft.operators.ModelCodec
+
 /** Point-prediction against the served model — the Spark analog of the
   * reference's query clients (SURVEY.md §2.3 J1/J4/J5).
   *
-  * Reference: ALSPredict.java:65-83 fetches `"user-U"` and `"item-I"` state
+  * Reference: ALSPredict.java:65-83 fetches the user and item state keys
   * and dot-products; SVMPredict.java:63-85 fetches one weight per feature
   * and accumulates; RangePartitionSVMPredict.java:56-106 amortizes lookups
   * per `featureId/range` bucket. Missing keys are `Optional.empty`
@@ -28,17 +30,17 @@ final class PredictService(store: ServingStore.FactorStore,
 
   /** J5: ALS pair prediction. None iff a side is absent and no fallback. */
   def predictPair(userId: Long, itemId: Long): Option[Double] = {
-    val u = store.get(s"$userId-U").orElse(meanVector)
-    val i = store.get(s"$itemId-I").orElse(meanVector)
+    val u = store.get(ModelCodec.key(userId, ModelCodec.User)).orElse(meanVector)
+    val i = store.get(ModelCodec.key(itemId, ModelCodec.Item)).orElse(meanVector)
     for (uv <- u; iv <- i) yield dot(uv, iv)
   }
 
   /** A6: SVM sparse prediction Σ w_f * x_f over (featureId -> value) pairs;
     * absent features contribute 0 (the reference skips them too). Weights
-    * live under key "fid-W" with a 1-element factor array. */
+    * live under the feature's weight key with a 1-element factor array. */
   def predictSparse(features: Map[Long, Double]): Double =
     features.iterator.map { case (fid, x) =>
-      store.get(s"$fid-W").map(_.head * x).getOrElse(0.0)
+      store.get(ModelCodec.key(fid, ModelCodec.Weight)).map(_.head * x).getOrElse(0.0)
     }.sum
 
   /** Signed class decision, threshold 0 (SVMPredict.java:80-85). */

@@ -2,7 +2,11 @@ package graft.streaming
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+
+import graft.operators.{AlsScoring, ModelCodec}
 
 /** The served-model store — Spark's stand-in for Flink queryable state
   * (SURVEY.md §7.3).
@@ -118,19 +122,47 @@ object ServingStore {
     }
 
   /** The store's state split into the two relational factor tables —
-    * (user_id, uf) and (item_id, itf); non-numeric keys (the MEAN rows)
-    * are excluded. The single place that knows the "id-KIND" key format
-    * on the read side. */
+    * (user_id, uf) and (item_id, itf); keys without a numeric id (the MEAN
+    * rows) are excluded. Keys are read through [[ModelCodec.idOfKey]]. */
   def factorFrames(spark: org.apache.spark.sql.SparkSession,
                    store: FactorStore): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions._
     val snap = snapshotDF(spark, store)
     def side(kind: String, idCol: String, vecCol: String) =
-      snap.filter(col("key").endsWith(s"-$kind"))
-        .select(split(col("key"), "-").getItem(0).try_cast("long").as(idCol),
+      snap.select(ModelCodec.idOfKey(col("key"), kind).as(idCol),
           col("factors").as(vecCol))
         .filter(col(idCol).isNotNull)
-    (side("U", "user_id", "uf"), side("I", "item_id", "itf"))
+    (side(ModelCodec.User, "user_id", "uf"), side(ModelCodec.Item, "item_id", "itf"))
+  }
+
+  /** A rating micro-batch scored against one store snapshot, with the
+    * snapshot's factor tables and MEAN vectors. */
+  final case class ScoredRatings(scored: DataFrame, userF: DataFrame, itemF: DataFrame,
+                                 meanU: Option[Column], meanI: Option[Column])
+
+  /** Parse "user,item,rating" lines (SGD.java:96-110) and score them
+    * with [[AlsScoring.scored]]. A row with a malformed field is dropped:
+    * a poison record must neither kill the query nor reach a state key. */
+  def scoreRatings(lines: DataFrame, store: FactorStore): ScoredRatings = {
+    val field = (i: Int) => try_element_at(split(col("value"), ","), lit(i))
+    val ratings = lines
+      .select(field(1).try_cast("long").as("user_id"),
+        field(2).try_cast("long").as("item_id"),
+        field(3).try_cast("double").as("rating"))
+      .na.drop()
+    val (userF, itemF) = factorFrames(lines.sparkSession, store)
+    val meanU = store.get(ModelCodec.MeanUser).map(lit)
+    val meanI = store.get(ModelCodec.MeanItem).map(lit)
+    ScoredRatings(AlsScoring.scored(ratings, userF, itemF, meanU, meanI),
+      userF, itemF, meanU, meanI)
+  }
+
+  /** The one sink of the serve loop's stages (consumer, SGD, evaluator):
+    * `body` on every micro-batch. Update mode is what the consumer's keyed
+    * state needs; for the stateless rating streams it equals Append. */
+  def eachBatch[T](stream: Dataset[T], checkpointDir: Option[String])(
+      body: (Dataset[T], Long) => Unit): StreamingQuery = {
+    val w = stream.writeStream.outputMode(OutputMode.Update).foreachBatch(body)
+    checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
   }
 
   /** The store's state as a DataFrame — the relational face of the served

@@ -1,10 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorFunctions._
+import graft.operators.{AlsScoring, ModelCodec}
 
 /** Online matrix-factorization SGD over the served model (SURVEY.md §2.9,
   * §7.2 step 5).
@@ -30,114 +32,52 @@ import graft.functions.VectorFunctions._
 object SgdUpdater {
 
   /** One mini-batch SGD step for the USER side: returns updated
-    * (user_id, uf). Aggregates Σ err·itf per user — partial map-side sums,
-    * one shuffle keyed by user — then applies the axpy update. */
+    * (user_id, uf). Only ratings whose user and item are both in the model
+    * take part. */
   def userStep(ratings: DataFrame, userF: DataFrame, itemF: DataFrame,
-               lr: Double, lambda: Double = 0.0,
-               meanU: Option[Array[Double]] = None,
-               meanI: Option[Array[Double]] = None): DataFrame =
-    gradStep(ratings, userF, itemF, lr, lambda,
-      keyCol = "user_id", vecCol = "uf", otherVecCol = "itf", meanU, meanI)
+               lr: Double, lambda: Double = 0.0): DataFrame =
+    step(AlsScoring.scored(ratings, userF, itemF), userF,
+      "user_id", "uf", "itf", None, lr, lambda)
 
-  /** Symmetric step for the ITEM side: returns updated (item_id, itf). */
-  def itemStep(ratings: DataFrame, userF: DataFrame, itemF: DataFrame,
-               lr: Double, lambda: Double = 0.0,
-               meanU: Option[Array[Double]] = None,
-               meanI: Option[Array[Double]] = None): DataFrame =
-    gradStep(ratings, userF, itemF, lr, lambda,
-      keyCol = "item_id", vecCol = "itf", otherVecCol = "uf", meanU, meanI)
-
-  private def meanCol(m: Option[Array[Double]]) =
-    m.map(v => array(v.toSeq.map(lit): _*))
-
-  /** The scored batch: ratings joined with both factor sides + err. With
-    * mean vectors present, missing keys fall back to the served MEAN rows
-    * instead of dropping the rating — the reference's orElse(MEAN)
-    * (SGD.java:142-147,227); without them the joins stay inner. */
-  def scoredBatch(ratings: DataFrame, userF: DataFrame, itemF: DataFrame,
-                  meanU: Option[Array[Double]],
-                  meanI: Option[Array[Double]]): DataFrame = {
-    def side(df: DataFrame, key: String, vec: String,
-             mean: Option[Array[Double]])(base: DataFrame): DataFrame =
-      mean match {
-        case Some(m) => base.join(broadcast(df), Seq(key), "left_outer")
-          .withColumn(vec, coalesce(col(vec), array(m.toSeq.map(lit): _*)))
-        case None => base.join(broadcast(df), key)
-      }
-    side(itemF, "item_id", "itf", meanI)(
-      side(userF, "user_id", "uf", meanU)(ratings))
-      .withColumn("err", col("rating") - dot(col("uf"), col("itf")))
-  }
-
-  private def gradStep(ratings: DataFrame, userF: DataFrame, itemF: DataFrame,
-                       lr: Double, lambda: Double,
-                       keyCol: String, vecCol: String, otherVecCol: String,
-                       meanU: Option[Array[Double]],
-                       meanI: Option[Array[Double]]): DataFrame =
-    gradFromScored(scoredBatch(ratings, userF, itemF, meanU, meanI),
-      userF, itemF, lr, lambda, keyCol, vecCol, otherVecCol,
-      if (keyCol == "user_id") meanU else meanI)
-
-  /** Gradient + update from an already-scored batch (so the two sides can
-    * share one scored join — see [[updateLoop]]). */
-  private def gradFromScored(scored: DataFrame, userF: DataFrame,
-                             itemF: DataFrame, lr: Double, lambda: Double,
-                             keyCol: String, vecCol: String, otherVecCol: String,
-                             thisMean: Option[Array[Double]]): DataFrame = {
-    // Σ err·other per key in ONE aggregation: the graft_vecsum
-    // TypedImperativeAggregate keeps a mutable k-dim buffer per key with
-    // map-side combine — no posexplode row blow-up, no second shuffle.
+  /** The gradient step of one side from a scored batch, against that
+    * side's own factor table `own` (keyCol, vecCol). Σ err·other per key
+    * in ONE aggregation: the graft_vecsum TypedImperativeAggregate keeps a
+    * mutable k-dim buffer per key with map-side combine — no posexplode
+    * row blow-up, no second shuffle. Then u' = u + lr*(grad − λ·u); with a
+    * mean, a key absent from the model starts from it (cold-start
+    * onboarding, SGD.java:219-234). */
+  private def step(scored: DataFrame, own: DataFrame, keyCol: String,
+                   vecCol: String, otherVecCol: String, mean: Option[Column],
+                   lr: Double, lambda: Double): DataFrame = {
     val grads = scored
-      .select(col(keyCol), scale(col(otherVecCol), col("err")).as("g"))
+      .select(col(keyCol),
+        scale(col(otherVecCol), col("rating") - col("prediction")).as("g"))
       .groupBy(col(keyCol))
       .agg(vecSum(col("g")).as("grad"))
-    // u' = u + lr*(grad − λ·u); a key absent from the model starts from the
-    // MEAN vector (cold-start onboarding, SGD.java:219-234)
-    val cur = if (keyCol == "user_id") userF else itemF
-    val joined = meanCol(thisMean) match {
-      case Some(m) => grads.join(broadcast(cur), Seq(keyCol), "left_outer")
-        .withColumn(vecCol, coalesce(col(vecCol), m))
-      case None => cur.join(grads, keyCol)
-    }
-    joined.select(col(keyCol),
-      zip_with(col(vecCol), col("grad"),
-        (u, g) => u + lit(lr) * (g - lit(lambda) * u)).as(vecCol))
+    AlsScoring.lookup(grads, own, keyCol, vecCol, mean)
+      .select(col(keyCol),
+        zip_with(col(vecCol), col("grad"),
+          (u, g) => u + lit(lr) * (g - lit(lambda) * u)).as(vecCol))
   }
 
   /** Wire a rating-record stream into the feedback loop: each micro-batch
-    * reads the store snapshot, takes one SGD step on both sides, and
-    * upserts updated vectors back under their "id-U"/"id-I" state keys. */
+    * is scored against the store snapshot once, takes one SGD step per
+    * side, and upserts the updated vectors under their state keys. */
   def updateLoop(spark: SparkSession, ratingLines: DataFrame,
                  store: ServingStore.FactorStore,
                  lr: Double, lambda: Double = 0.0,
-                 checkpointDir: Option[String] = None): StreamingQuery = {
-    val w = ratingLines.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val s = batch.sparkSession
-        // null-safe parse + drop malformed rows: a poison record must not
-        // produce a null state key (TrieMap.put(null) would kill the query)
-        val ratings = batch
-          .select(graft.operators.ModelCodec.parseRatingLines(col("value")): _*)
-          .filter(col("user_id").isNotNull && col("item_id").isNotNull
-            && col("rating").isNotNull)
-        // served MEAN rows (ALSMeanVector output) drive the missing-key
-        // fallback; they are excluded from the factor tables themselves
-        val meanU = store.get("MEAN-U")
-        val meanI = store.get("MEAN-I")
-        val (userF, itemF) = ServingStore.factorFrames(s, store)
-        // one scored join per batch, shared by both gradient sides
-        val scored = scoredBatch(ratings, userF, itemF, meanU, meanI)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val newU = gradFromScored(scored, userF, itemF, lr, lambda,
-            "user_id", "uf", "itf", meanU)
-            .select(concat(col("user_id"), lit("-U")).as("key"), col("uf").as("factors"))
-          val newI = gradFromScored(scored, userF, itemF, lr, lambda,
-            "item_id", "itf", "uf", meanI)
-            .select(concat(col("item_id"), lit("-I")).as("key"), col("itf").as("factors"))
-          ServingStore.upsertBatch(store, newU.unionAll(newI))
-        } finally scored.unpersist()
-      }
-    checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
-  }
+                 checkpointDir: Option[String] = None): StreamingQuery =
+    ServingStore.eachBatch(ratingLines, checkpointDir) { (batch, _) =>
+      val b = ServingStore.scoreRatings(batch, store)
+      // one scored join per batch, shared by both gradient sides
+      val scored = b.scored.persist(StorageLevel.MEMORY_AND_DISK)
+      def side(own: DataFrame, id: String, vec: String, other: String,
+               kind: String, mean: Option[Column]) =
+        step(scored, own, id, vec, other, mean, lr, lambda)
+          .select(ModelCodec.key(col(id), kind).as("key"), col(vec).as("factors"))
+      try ServingStore.upsertBatch(store,
+        side(b.userF, "user_id", "uf", "itf", ModelCodec.User, b.meanU)
+          .unionAll(side(b.itemF, "item_id", "itf", "uf", ModelCodec.Item, b.meanI)))
+      finally scored.unpersist()
+    }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.AlsScoring
@@ -11,33 +10,18 @@ import graft.operators.AlsScoring
   * each rating micro-batch is scored against the CURRENT store snapshot and
   * appends one (batch_id, mse, n) row to the metrics sink).
   *
-  * Missing user/item keys fall back to the served MEAN rows when present —
-  * the same orElse(MEAN) the batch evaluator applies (MSE.java:129-158). */
+  * Each missing user or item key falls back to its served MEAN row when
+  * that row is present — the per-lookup orElse(MEAN) of MSE.java:129-158. */
 object StreamingEvaluator {
 
   /** Per-batch MSE rows are delivered to `onResult` (batchId, mse, count).
-    * Ratings arrive as "user,item,rating" lines. */
+    * Ratings arrive as "user,item,rating" lines; malformed rows are dropped
+    * before scoring, so (mse, n) cover the same rows. */
   def mseStream(spark: SparkSession, ratingLines: DataFrame,
                 store: ServingStore.FactorStore,
                 onResult: (Long, Double, Long) => Unit): StreamingQuery =
-    ratingLines.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val s = batch.sparkSession
-        // malformed rows are dropped BEFORE scoring so the reported (mse, n)
-        // are computed over the same row set
-        val ratings = batch
-          .select(graft.operators.ModelCodec.parseRatingLines(col("value")): _*)
-          .filter(col("user_id").isNotNull && col("item_id").isNotNull
-            && col("rating").isNotNull)
-        val (userF, itemF) = ServingStore.factorFrames(s, store)
-        val preds = (store.get("MEAN-U"), store.get("MEAN-I")) match {
-          case (Some(mu), Some(mi)) =>
-            AlsScoring.predictionsWithFallback(ratings, userF, itemF,
-              array(mu.toSeq.map(lit): _*), array(mi.toSeq.map(lit): _*))
-          case _ => AlsScoring.predictions(ratings, userF, itemF)
-        }
-        val row = AlsScoring.mse(preds).collect()(0)
-        if (!row.isNullAt(0)) onResult(batchId, row.getDouble(0), row.getLong(1))
-      }
-      .start()
+    ServingStore.eachBatch(ratingLines, None) { (batch, batchId) =>
+      val row = AlsScoring.mse(ServingStore.scoreRatings(batch, store).scored).collect()(0)
+      if (!row.isNullAt(0)) onResult(batchId, row.getDouble(0), row.getLong(1))
+    }
 }

@@ -123,6 +123,61 @@ class StreamingServeSpec extends SparkSpec {
     assert(math.abs(mse - 1.0) < 1e-9)
   }
 
+  test("streaming evaluator falls back per side: only MEAN-U served") {
+    implicit val sqlCtx = spark.sqlContext
+    val store = ServingStore.factorStore()
+    store.put("MEAN-U", Array(0.5, 0.25))
+    store.put("7-I", Array(2.0, 4.0))
+    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Long)]
+    val in = MemoryStream[String]
+    val q = StreamingEvaluator.mseStream(spark, in.toDF(), store,
+      (b, m, n) => results.synchronized { results += ((b, m, n)) })
+    try {
+      // unknown user 99 is scored with MEAN-U·7-I = 0.5*2 + 0.25*4 = 2.0
+      in.addData("99,7,3.5")
+      q.processAllAvailable()
+    } finally q.stop()
+    val rows = results.synchronized(results.toList)
+    assert(rows.size === 1, s"expected one reported batch, got $rows")
+    val (_, mse, n) = rows.head
+    assert(n === 1L)
+    val err = 3.5 - (0.5 * 2.0 + 0.25 * 4.0)
+    assert(math.abs(mse - err * err) < 1e-12)
+  }
+
+  test("one updateLoop micro-batch writes exactly SgdUpdater.userStep's vectors") {
+    implicit val sqlCtx = spark.sqlContext
+    val store = ServingStore.factorStore()
+    Ratings.userFactors(spark, sf0).collect()
+      .foreach(r => store.put(s"${r.getLong(0)}-U", r.getSeq[Double](1).toArray))
+    Ratings.itemFactors(spark, sf0).collect()
+      .foreach(r => store.put(s"${r.getLong(0)}-I", r.getSeq[Double](1).toArray))
+    val batch = Ratings.ratings(spark, sf0).limit(500)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val lr = 0.01
+    val lambda = 0.1
+    // the step the loop must reproduce, from the same snapshot and ratings
+    val (userF, itemF) = ServingStore.factorFrames(spark, store)
+    val expected = SgdUpdater.userStep(
+      batch.toDF("user_id", "item_id", "rating"), userF, itemF, lr, lambda)
+      .as[(Long, Array[Double])].collect().toMap
+    assert(expected.keySet === batch.map(_._1).toSet)
+
+    val in = MemoryStream[String]
+    val q = SgdUpdater.updateLoop(spark, in.toDF(), store, lr, lambda)
+    try {
+      in.addData(batch.map { case (u, i, r) => s"$u,$i,$r" })
+      q.processAllAvailable()
+    } finally q.stop()
+    expected.foreach { case (u, want) =>
+      val got = store.get(s"$u-U").get
+      assert(got.length === want.length)
+      got.zip(want).foreach { case (g, w) =>
+        assert(math.abs(g - w) <= 1e-12, s"user $u: streamed $g, userStep $w")
+      }
+    }
+  }
+
   test("poison records do not kill the serve or SGD queries") {
     implicit val sqlCtx = spark.sqlContext
     val store = ServingStore.factorStore()
