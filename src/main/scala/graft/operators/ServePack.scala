@@ -12,9 +12,9 @@ import graft.streaming.{ModelConsumer, SgdUpdater}
   * that the streaming specs exercise with MemoryStream.
   *
   *  - q16: latest-record-per-key — the consumer's `ValueState` overwrite
-  *    semantics (ALSKafkaConsumer.java:85-92) as max_by(seq) per key; one
-  *    micro-batch of [[graft.streaming.ModelConsumer.latestPerKey]] computes
-  *    exactly this.
+  *    semantics (ALSKafkaConsumer.java:85-92) as max_by(seq) per key; the
+  *    store after one micro-batch of
+  *    [[graft.streaming.ModelConsumer.serveTo]] holds exactly this.
   *  - q17: one mini-batch SGD step (SGD.java:160-217 as dataflow) — updated
   *    user vectors after a single gradient step from the deterministic
   *    factor fixture.

@@ -7,6 +7,8 @@ import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions.vecSum
+
 /** Batch model training (SURVEY.md §7.2 step 3, §2.10 ML estimators).
   *
   * Reference jobs:
@@ -73,15 +75,18 @@ object Training {
     enc(userF, "user_id", "uf", "U").unionAll(enc(itemF, "item_id", "itf", "I"))
   }
 
-  /** ALSMeanVector parity: element-wise mean over all factor vectors —
-    * posexplode + per-position avg (partial map-side agg), re-assembled in
-    * position order. */
-  def meanVector(factors: DataFrame): DataFrame =
-    factors
-      .select(posexplode(col("factors")).as(Seq("pos", "f")))
-      .groupBy(col("pos")).agg(avg(col("f")).as("mean_f"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("mean_f")))),
-        e => e.getField("mean_f")).as("mean_vector"))
+  /** ALSMeanVector parity: element-wise mean in one pass — the
+    * [[graft.functions.VectorFunctions.vecSum]] aggregate over the count of
+    * the rows it summed (it skips a row with a null element). Vectors of
+    * different lengths fail loudly instead of averaging raggedly. */
+  def meanVector(factors: DataFrame): DataFrame = {
+    val f = col("factors")
+    val len = when(f.isNotNull && !exists(f, _.isNull), size(f))
+    factors.agg(vecSum(f).as("sum"), count(len).as("n"), min(len).as("lo"), max(len).as("hi"))
+      .select(when(col("lo") =!= col("hi"), raise_error(format_string(
+          "meanVector: factor vectors differ in length (%d to %d)", col("lo"), col("hi"))))
+        .otherwise(transform(col("sum"), x => x / col("n"))).as("mean_vector"))
+  }
 
   /** The mean rows in wire format — "MEAN,U,…" / "MEAN,I,…", the exact
     * export of ALSMeanVector.scala:35 that SGD's fallback consumes. */

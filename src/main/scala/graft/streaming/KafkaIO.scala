@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * stream; ALSKafkaProducer.java:29-37 / SGD.java:73-81 publish with
   * `setFlushOnCheckpoint(true)` — at-least-once. Spark's Kafka source/sink
   * give the same guarantee (at-least-once on the sink; exactly-once
-  * downstream via the ServingStore's idempotent upsert).
+  * downstream via the consumer's offset-guarded store upsert).
   *
   * NOTE: requires the `spark-sql-kafka-0-10` connector on the classpath;
   * this container ships without it (verified against the offline coursier
@@ -103,7 +103,7 @@ object KafkaIO {
       .options(sinkOptions(bootstrap, topic, checkpointDir))
       .start()
 
-  /** End-to-end serve wiring: topic → latest-per-key state → store.
+  /** End-to-end serve wiring: topic → latest-per-key upsert → store.
     * The Kafka offset is the seq, so replayed batches upsert idempotently. */
   def serveFromKafka(spark: SparkSession, bootstrap: String, topic: String,
                      store: ServingStore.FactorStore,
@@ -112,7 +112,7 @@ object KafkaIO {
       checkpointDir)
 
   /** The connector-independent tail of [[serveFromKafka]]: any (value,
-    * offset, …) record stream → latest-per-key → idempotent store upsert,
+    * offset, …) record stream → offset-guarded latest-per-key store upsert,
     * through [[ModelConsumer.serveTo]] with the offset as the sequence.
     * KafkaIOSpec drives it end-to-end on the wire-schema twin. */
   def serveFromLines(spark: SparkSession, lines: DataFrame,

@@ -1,33 +1,30 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.ModelCodec
 
 /** The model-serving consumer (SURVEY.md §2.9): a stream of
-  * `"id,KIND,f1;f2;…"` model records becomes latest-value-per-key state,
-  * materialized into a [[ServingStore]] each micro-batch.
+  * `"id,KIND,f1;f2;…"` model records becomes latest-value-per-key in a
+  * [[ServingStore]], upserted each micro-batch.
   *
   * Reference: ALSKafkaConsumer.java:67-92 / SVMKafkaConsumer.java:68-92 —
   * Kafka source → rebalance → parse map → `keyBy(0)` →
   * `asQueryableState("ALS_MODEL", ValueStateDescriptor)`; each record
-  * overwrites its key's `ValueState`.
+  * overwrites its key's `ValueState`, which is the served model.
   *
-  * Spark re-design: the keyed latest-value state is
-  * `groupByKey(key).mapGroupsWithState` (hash-shuffles on key exactly like
-  * `keyBy`, state co-located with its partition — the property that scales
-  * this across 1000 executors); only keys that changed in the micro-batch
-  * are emitted, and `foreachBatch` upserts that delta into the store. The
-  * within-batch winner is the record with the highest monotonic sequence
-  * (Kafka offset / file row position) — Flink gets this order implicitly
-  * from per-partition FIFO.
+  * Spark re-design: the store is the served model, kept once. A
+  * micro-batch is one stateless stage (parse, collect) and a
+  * `foreachBatch` sink that puts a record only when its sequence (Kafka
+  * offset) is at least the last one applied to its key. A replayable,
+  * offset-tracked source plus this idempotent upsert give exactly-once
+  * output with no operator state (Structured Streaming, SIGMOD 2018).
   */
 object ModelConsumer {
-
-  case class KeyedRecord(key: String, seq: Long, factors: Array[Double])
-  case class KeyedState(seq: Long, factors: Array[Double])
 
   /** Parse a raw record stream into (key, seq, factors). For Kafka pass
     * seqCol="offset" so within-batch order per key is the log order — the
@@ -46,46 +43,38 @@ object ModelConsumer {
       .filter(col("factors").isNotNull &&
         !exists(col("factors"), f => f.isNull))
 
-  /** Latest-record-wins per key across micro-batches; emits a key ONLY in
-    * batches where its state actually changed (flatMap — stale replays
-    * emit nothing, so the foreachBatch upsert really is a delta). State
-    * size = O(distinct keys), plan = one hash shuffle on key per batch. */
-  def latestPerKey(spark: SparkSession, parsed: DataFrame): Dataset[KeyedRecord] = {
-    import spark.implicits._
-    parsed.as[KeyedRecord]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[KeyedState, KeyedRecord](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (_: String, records: Iterator[KeyedRecord], state: GroupState[KeyedState]) =>
-          val incoming = records.maxBy(_.seq)
-          val cur = state.getOption
-          if (cur.forall(_.seq <= incoming.seq)) {
-            state.update(KeyedState(incoming.seq, incoming.factors))
-            Iterator.single(incoming)
-          } else {
-            Iterator.empty
-          }
-      }
-  }
-
-  /** Batch twin of [[latestPerKey]] — max_by(seq) per key. Used by the
-    * oracle-checked q16; semantically identical to one micro-batch. */
+  /** Batch twin of the consumer — max_by(seq) per key, what the store
+    * holds after one micro-batch. Used by the oracle-checked q16. */
   def latestPerKeyBatch(parsed: DataFrame): DataFrame =
     parsed.groupBy(col("key"))
       .agg(max_by(col("factors"), col("seq")).as("factors"),
         max(col("seq")).as("seq"))
 
   /** The one stream→store wiring: parse (`seqCol` as the per-key
-    * sequence, see [[parse]]), keep latest-per-key state, and upsert the
-    * changed keys each micro-batch. File and memory sources pass no
-    * seqCol; the Kafka path ([[KafkaIO.serveFromLines]]) passes "offset".
-    * Checkpointing + restart supervision come from the streaming engine
-    * (`checkpointLocation`), matching the reference's
-    * checkpoint/fixed-delay-restart envelope (ALSKafkaConsumer.java:44-51). */
+    * sequence, see [[parse]]) and upsert latest-per-key each micro-batch.
+    * File and memory sources pass no seqCol; the Kafka path
+    * ([[KafkaIO.serveFromLines]]) passes "offset". The sequence guard
+    * lives as long as the query, which covers every replay: Spark re-runs
+    * only the uncommitted batch with the same offsets, and Kafka gives a
+    * re-sent record a new, higher offset. `checkpointLocation` gives the
+    * reference's checkpoint/restart envelope (ALSKafkaConsumer.java:44-51).
+    * The checkpoint restores offsets only, so a fresh in-memory store after
+    * a process restart is rebuilt by replaying the compacted topic from
+    * `earliest` under a new checkpoint. */
   def serveTo(spark: SparkSession, lines: DataFrame,
               store: ServingStore.FactorStore,
               checkpointDir: Option[String] = None,
-              seqCol: Option[String] = None): StreamingQuery =
-    ServingStore.eachBatch(latestPerKey(spark, parse(lines, seqCol)), checkpointDir)(
-      (batch, _) => ServingStore.upsertBatch(store, batch.toDF()))
+              seqCol: Option[String] = None): StreamingQuery = {
+    import spark.implicits._
+    val applied = TrieMap.empty[String, Long]
+    ServingStore.eachBatch(parse(lines, seqCol).as[(String, Long, Array[Double])],
+        checkpointDir) { (batch, _) =>
+      batch.collect().foreach { case (key, seq, factors) =>
+        if (applied.get(key).forall(_ <= seq)) {
+          applied.update(key, seq)
+          store.put(key, factors)
+        }
+      }
+    }
+  }
 }

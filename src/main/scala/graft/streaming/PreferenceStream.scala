@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * DPO-pair assembly for continuous ingest: as scored documents arrive,
   * each (source, lang) prompt group keeps its running best and worst
   * member, and RE-EMITS the group's pair whenever the pair changes (delta
-  * emit, the ModelConsumer convention) — downstream preference training
+  * emit) — downstream preference training
   * always holds the freshest (chosen, rejected) per group without any
   * batch rebuild.
   *

@@ -4,7 +4,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{AlsScoring, ModelCodec}
 
@@ -18,15 +18,15 @@ import graft.operators.{AlsScoring, ModelCodec}
   * `keyBy(0).asQueryableState(...)` (ALSKafkaConsumer.java:85-92) with
   * latest-value-wins per key.
   *
-  * Spark re-design: state is materialized per micro-batch by
-  * [[ModelConsumer]] via `foreachBatch` upserts into this store; reads are
+  * Spark re-design: this store is the served model itself, written per
+  * micro-batch by [[ModelConsumer]]'s `foreachBatch` upsert; reads are
   * in-process map lookups (`Option` mirrors `Optional.empty` absent-key
   * semantics). Freshness is bounded by the trigger interval instead of
   * per-record — the documented semantic delta (SURVEY.md §7.3).
   *
   * Scale note: on a real cluster this trait's impl would be an external KV
-  * (the upsert already arrives as a compacted per-key delta, tiny relative
-  * to the fact data); the in-memory [[TrieMapServingStore]] is the
+  * (the upsert moves only the micro-batch's records, tiny relative to the
+  * fact data); the in-memory [[TrieMapServingStore]] is the
   * single-process impl, BOUNDED by an explicit byte budget — a 100M-key
   * model must fail loudly at the put that crosses the budget, not OOM the
   * driver minutes later. [[ServingStore.snapshotDF]] exposes the state
@@ -109,9 +109,9 @@ object ServingStore {
     new TrieMapServingStore[String, Array[Double]](maxBytes)
 
   /** Upsert a micro-batch of (key STRING, factors ARRAY<DOUBLE>) rows.
-    * The batch is already compacted to one row per key by the consumer, so
-    * the collect here moves only |updated keys| rows to the store — never
-    * the stream itself. Rows with a null key or null factors (malformed
+    * [[SgdUpdater]] calls it with one row per updated key, so the collect
+    * here moves only |updated keys| rows to the store — never the rating
+    * stream itself. Rows with a null key or null factors (malformed
     * wire records) are skipped: one poison record must not kill the
     * streaming query, and at-least-once replay would re-deliver it. */
   def upsertBatch(store: FactorStore, batch: DataFrame): Unit =
@@ -157,11 +157,11 @@ object ServingStore {
   }
 
   /** The one sink of the serve loop's stages (consumer, SGD, evaluator):
-    * `body` on every micro-batch. Update mode is what the consumer's keyed
-    * state needs; for the stateless rating streams it equals Append. */
+    * `body` on every micro-batch. All three are stateless, so the default
+    * Append mode hands `body` exactly the batch's rows. */
   def eachBatch[T](stream: Dataset[T], checkpointDir: Option[String])(
       body: (Dataset[T], Long) => Unit): StreamingQuery = {
-    val w = stream.writeStream.outputMode(OutputMode.Update).foreachBatch(body)
+    val w = stream.writeStream.foreachBatch(body)
     checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
   }
 

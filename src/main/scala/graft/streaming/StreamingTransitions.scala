@@ -24,7 +24,7 @@ case class Transition(user_id: Long, prev: String, cur: String)
   * StreamingGraphSpec).
   *
   * Scale shape: state is O(users) single rows (RocksDB-backed in
-  * production config, same as ModelConsumer); the per-batch sort is per
+  * production config); the per-batch sort is per
   * (user, micro-batch) slice, never global. Late events older than the
   * stored last event would emit a pair the batch twin orders differently —
   * feed through a watermark + sorted replay for exactly-once order, or

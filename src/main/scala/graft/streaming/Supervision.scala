@@ -13,11 +13,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * `StreamingQuery` and recovery is left to the driver program. This
   * supervisor owns that loop: (re)start the query via the caller's
   * factory, await termination, and on failure restart after a fixed delay
-  * up to `maxRetries` times. State survives restarts exactly as in the
-  * reference because the factory starts from the same
-  * `checkpointLocation` — offsets and keyed state recover, and the
-  * ServingStore upsert is idempotent, so replayed batches are harmless
-  * (the at-least-once envelope of SURVEY.md §2.9).
+  * up to `maxRetries` times. Progress survives restarts because the
+  * factory starts from the same `checkpointLocation` — source offsets
+  * recover, the in-process ServingStore keeps its values, and its upsert
+  * is idempotent, so the replayed batch is harmless (the at-least-once
+  * envelope of SURVEY.md §2.9).
   *
   * The retry budget is TOTAL, matching Flink's fixed-delay semantics; a
   * clean `stop()` never consumes it.

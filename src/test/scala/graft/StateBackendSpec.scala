@@ -2,9 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import scala.jdk.CollectionConverters._
 
-import graft.streaming.{ModelConsumer, ServingStore}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
+
+import graft.operators.Selection
+import graft.streaming.{ModelConsumer, ServingStore, StreamingQuota}
 
 /** Fault-tolerance envelope of the serve loop (SURVEY.md §2.9): state
   * backend selection (reference: ALSKafkaConsumer.java:54-65 memory/fs/
@@ -40,6 +44,39 @@ class StateBackendSpec extends SparkSpec {
         case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
+  }
+
+  test("a stateful operator runs under the RocksDB provider with batch parity") {
+    // the consumer keeps no operator state, so the provider is exercised
+    // through StreamingQuota.enforce (flatMapGroupsWithState)
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      implicit val sqlCtx = spark.sqlContext
+      val in = MemoryStream[(Long, String)]
+      val q = StreamingQuota.enforce(in.toDF().toDF("doc_id", "domain"), cap = 2)
+        .writeStream.format("memory").queryName("quota_rocksdb").start()
+      try {
+        in.addData((1L, "a"), (2L, "a"), (10L, "b"))
+        q.processAllAvailable()
+        in.addData((3L, "a"), (11L, "b"), (12L, "b"))
+        q.processAllAvailable()
+        val ops = q.lastProgress.stateOperators
+        assert(ops.nonEmpty && ops.forall(_.customMetrics.keySet.asScala
+          .exists(_.startsWith("rocksdb"))), "state must live in RocksDB")
+        val got = spark.table("quota_rocksdb")
+          .as[(Long, String, Int)].collect().sortBy(_._1).toSeq
+        assert(got === Seq((1L, "a", 1), (2L, "a", 2), (10L, "b", 1), (11L, "b", 2)))
+        val batch = Selection.domainCap(
+          Seq((1L, "a"), (2L, "a"), (3L, "a"), (10L, "b"), (11L, "b"), (12L, "b"))
+            .toDF("doc_id", "domain"),
+          "domain", Seq(col("doc_id")), cap = 2)
+          .select("doc_id").as[Long].collect().sorted.toSeq
+        assert(got.map(_._1) === batch)
+      } finally q.stop()
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("restart from checkpoint preserves latest-per-key state") {

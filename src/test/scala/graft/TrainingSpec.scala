@@ -49,6 +49,19 @@ class TrainingSpec extends SparkSpec {
     assert(mv.toSeq === Seq(2.0, 4.0))
   }
 
+  test("meanVector skips a row with a null element in the sum and the count") {
+    val f = Seq(Seq(Some(1.0), Some(3.0)), Seq(Some(3.0), Some(5.0)),
+      Seq(Some(100.0), None)).toDF("factors")
+    val mv = Training.meanVector(f).as[Array[Double]].collect()(0)
+    assert(mv.toSeq === Seq(2.0, 4.0))
+  }
+
+  test("meanVector fails loudly on factor vectors of different lengths") {
+    val f = Seq(Tuple1(Array(1.0, 3.0)), Tuple1(Array(3.0))).toDF("factors")
+    val e = intercept[Exception](Training.meanVector(f).collect())
+    assert(e.getMessage.contains("differ in length (1 to 2)"), e.getMessage)
+  }
+
   test("LinearSVC separates a linearly separable set") {
     // label = sign of (2*x1 - x2): perfectly separable
     val data = (1 to 200).map { i =>
